@@ -24,7 +24,10 @@ import java.nio.charset.StandardCharsets
   * Resumability contract: a stage is skipped iff its manifest exists AND
   * its recorded input fingerprint equals the current chained fingerprint
   * (config + upstream fingerprints hashed in), making restarts idempotent
-  * and stale checkpoints self-invalidating.
+  * and stale checkpoints self-invalidating. `write` deletes the stage's
+  * manifest before it overwrites the data, so a write that dies part-way
+  * leaves no manifest behind: the next run recomputes the stage instead
+  * of resuming the remains under the previous fingerprint.
   */
 final class CheckpointStore(root: String, spark: SparkSession) {
 
@@ -47,6 +50,7 @@ final class CheckpointStore(root: String, spark: SparkSession) {
     * lineage), not the logical plan. */
   def write(stage: String, df: DataFrame, fingerprint: String): DataFrame = {
     val t0 = System.nanoTime()
+    Files.deleteIfExists(manifestPath(stage))
     df.write.mode("overwrite").parquet(dataPath(stage))
     val back = read(stage)
     val partCounts = back.groupBy(spark_partition_id().as("p"))

@@ -277,14 +277,16 @@ object Similarity {
 
   /** Rank (vec_id, neighbor_id, cosine) rows to their per-vec top-k with a
     * bounded insertion fold instead of a row_number() window (round 6,
-    * guide §2.4): the window shuffled every scored row AND sorted each
-    * whole partition to rank rows it then threw away (k of ~candidates
-    * kept); the fold ships the same skinny rows but keeps only k per group
-    * in O(rows x k) with no sort buffer. Identical output: same (cosine
-    * desc, neighbor_id asc) order via Spark's own double total order
-    * ([[cmpD]]), same row_number semantics (ranks 1..k, ties broken by
-    * neighbor asc). Shared by [[annTopK]] and [[ivfTopKFrom]]'s final
-    * merge; pinned against the window formulation in RewriteParitySpec. */
+    * guide §2.4): the window sorted each whole partition to rank rows it
+    * then threw away (k of ~candidates kept); the fold keeps only k per
+    * group in O(rows x k) with no sort buffer. It does not shuffle less:
+    * the window plan capped each map partition at ~k rows per vec with a
+    * map-side WindowGroupLimit before its exchange, while the fold
+    * shuffles every scored row plus a copy of the grouping key. Identical
+    * output: same (cosine desc, neighbor_id asc) order via Spark's own
+    * double total order ([[cmpD]]), same row_number semantics (ranks
+    * 1..k, ties broken by neighbor asc). Used by [[annTopK]] only; pinned
+    * against the window formulation in RewriteParitySpec. */
   private def topKRanked(scored: DataFrame, k: Int): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._

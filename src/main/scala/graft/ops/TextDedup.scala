@@ -320,9 +320,10 @@ object TextDedup {
     * cluster_id = min doc id reachable through near-dup pairs (singletons
     * cluster with themselves). The standard "keep one per near-dup
     * cluster" reduction a training-data pipeline runs after pair
-    * generation; reuses the pointer-jumped min-label CC (O(log d) rounds,
-    * each two hash shuffles), so it holds at any scale the pair step
-    * itself survives. */
+    * generation; reuses [[graft.pipeline.ConnectedComponents.run]] (a
+    * per-partition union-find contraction, then pointer-jumped min-label
+    * propagation over the contracted graph), so it holds at any scale the
+    * pair step itself survives. */
   def nearDupClusters(documents: DataFrame,
       pairsDf: Option[DataFrame] = None): DataFrame = {
     val pairs = pairsDf.getOrElse(lshPairs(documents))

@@ -4,35 +4,44 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stage 5a — DataFrame-based connected components over the candidate
-  * graph (iterative transitive closure; the reference's alternative
-  * clusterer `connectedCandidatesGuavaGraphs` + `GraphAnalysis
-  * .connectedComponents`, logic/MessagePassing.java:118-141,
-  * helper/GraphAnalysis.java:17-38 — the paper's "connected component"
-  * baseline, and the component pre-pass for greedy consistency
-  * clustering).
+  * graph (the reference's alternative clusterer
+  * `connectedCandidatesGuavaGraphs` + `GraphAnalysis.connectedComponents`,
+  * logic/MessagePassing.java:118-141, helper/GraphAnalysis.java:17-38 —
+  * the paper's "connected component" baseline, and the component pre-pass
+  * for greedy consistency clustering).
   *
-  * Algorithm: minimum-label propagation. labels(x) <- min(labels(x),
-  * min over neighbors labels(y)) until fixpoint; each iteration is two
-  * hash-shuffles, `localCheckpoint` truncates lineage (no recursion in
-  * Catalyst). ER candidate graphs after blocking have small components and
-  * tiny diameters, so the loop runs ~O(component diameter) iterations; the
-  * iteration cap + per-iteration changed-count are surfaced for
-  * observability. Skew (giant components) is handled upstream by the
-  * blocking valves and downstream by component-size caps in the greedy
-  * stage.
+  * Algorithm: per-partition contraction, then minimum-label propagation.
+  * A union-find over each input partition's edges collapses every
+  * partition-local component into a star on its smallest id; the stars
+  * keep the node set and the components of the input graph, so only the
+  * links BETWEEN partitions are left for propagation. The propagation
+  * loop sets labels(x) <- min(labels(x), min over neighbors labels(y)),
+  * then pointer-jumps, until fixpoint; `localCheckpoint` truncates
+  * lineage each round (no recursion in Catalyst). ER candidate graphs
+  * after blocking have small components and tiny diameters, so after the
+  * contraction the loop usually converges in one to three rounds. Skew
+  * (giant components) is handled upstream by the blocking valves and
+  * downstream by component-size caps in the greedy stage.
   */
 object ConnectedComponents {
 
   /** edges: (src, dst) undirected pair per surviving candidate (any
-    * direction). Returns (id, component) for every node appearing in
-    * edges; component = min node id reachable.
+    * direction; bigint node ids). Returns (id, component) for every node
+    * appearing in edges; component = min node id reachable. An edge with
+    * one null endpoint is a self-loop on the other node; an edge with two
+    * null endpoints names no node and is dropped.
     *
-    * Each round does min-label propagation over edges PLUS a pointer-jump
-    * (label <- label(label), well-defined because labels only ever take
-    * node-id values and only decrease), which halves the remaining
-    * label-chain depth — O(log diameter) rounds, so a 10^6-hop chain
-    * converges in ~20 rounds instead of 10^6. Raises instead of silently
-    * returning wrong labels if the cap is somehow hit. */
+    * The contraction emits (local root, node) for every node a partition
+    * saw, so the result is exact under any partitioning: the union of
+    * the stars has the input's connected components. Each propagation
+    * round then does min-label propagation over the stars PLUS a
+    * pointer-jump (label <- label(label), well-defined because labels
+    * only ever take node-id values and only decrease), which halves the
+    * remaining label-chain depth — O(log diameter) rounds when the
+    * contraction helps little (e.g. a path graph whose edges are spread
+    * round-robin), so a 10^6-hop chain converges in ~20 rounds instead of
+    * 10^6. Raises instead of silently returning wrong labels if the
+    * `maxIter` cap is hit. */
   def run(edges: DataFrame, maxIter: Int = 50,
       durableDir: Option[String] = None, durableEvery: Int = 5): DataFrame = {
     val spark = edges.sparkSession
@@ -48,16 +57,22 @@ object ConnectedComponents {
         spark.read.parquet(path)
       case _ => df.localCheckpoint()
     }
-    // dedup at HALF volume, then mirror (round 6, guide §2.3): normalize
-    // each edge to (min, max) and distinct THAT, then union the reversed
-    // copy — the previous shape unioned both directions first and ran the
-    // distinct over twice the rows. The mirrored union needs no second
-    // dedup: normalized rows have src <= dst, reversed ones dst <= src, so
-    // overlap is confined to self-loops — whose duplicate rows are
-    // harmless under the min() aggregations this loop consists of.
+    // normalize each edge to (min, max) — a one-null edge becomes a
+    // self-loop on its other node, a two-null edge names no node — then
+    // contract every partition with a union-find keeping the smaller id
+    // as root (`contract`); the stars it emits are already normalized.
+    // Distinct at half volume, then mirror: normalized rows have
+    // src <= dst, reversed ones dst <= src, so overlap is confined to
+    // self-loops — whose duplicate rows are harmless under the min()
+    // aggregations this loop consists of.
+    import spark.implicits._
     val und = edges
       .select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
+      .filter(col("src").isNotNull)
+      .as[(Long, Long)]
+      .mapPartitions(contract)
+      .toDF("src", "dst")
       .distinct()
     val sym = und
       .union(und.select(col("dst").as("src"), col("src").as("dst")))
@@ -110,6 +125,32 @@ object ConnectedComponents {
       sys.error(s"ConnectedComponents: not converged after $maxIter rounds " +
         "(component diameter > 2^maxIter is impossible, so this indicates a bug)")
     labels.withColumnRenamed("label", "component")
+  }
+
+  /** Union-find over one partition's normalized edges (union by smaller
+    * id, path splitting); emits (root, node) for every node seen, so each
+    * partition-local component becomes a star on its smallest id. */
+  private def contract(it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = new scala.collection.mutable.LongMap[Long]()
+    def find(x: Long): Long = {
+      var n = x
+      var p = parent.getOrElseUpdate(n, n)
+      while (p != n) {
+        val gp = parent(p)
+        parent.update(n, gp)
+        n = p
+        p = gp
+      }
+      n
+    }
+    it.foreach { case (a, b) =>
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent.update(rb, ra)
+      else if (rb < ra) parent.update(ra, rb)
+    }
+    // keys first: find() rewrites values while it compresses paths
+    parent.keys.toArray.iterator.map(n => (find(n), n))
   }
 
   /** Full assignment for every mention: singletons keep their own id as

@@ -138,11 +138,16 @@ class PipelineSpec extends SparkSpec {
   test("connected components: 300-hop chain converges within the round cap") {
     // A path graph has diameter = n-1; plain min-label propagation would
     // need 299 rounds (> maxIter 50) — the pointer-jump makes it O(log n).
+    // Spread round-robin over 16 partitions, adjacent edges rarely share a
+    // partition, so the per-partition contraction leaves a long chain:
+    // three rounds are not enough, the default cap is.
     val edges = (1L until 300L).map(i => (i, i + 1)).toDF("src", "dst")
+      .repartition(16)
     val comp = ConnectedComponents.run(edges)
       .as[(Long, Long)].collect().toMap
     assert(comp.size === 300)
     assert(comp.values.forall(_ == 1L))
+    intercept[RuntimeException](ConnectedComponents.run(edges, maxIter = 3))
   }
 
   test("giant-component path is cluster-identical to the exact BFS on sf0.001") {
